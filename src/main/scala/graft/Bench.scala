@@ -130,29 +130,12 @@ object Bench {
     }
     var failures = Map.empty[String, String]
     // SPARK_GRAFT_ONLY (r16, drift attribution): restrict the board to a
-    // subset — a comma-separated name list, or (when the value contains
-    // a '/') a file of newline-separated names. Built for A/B runs that
-    // hold the SURFACE fixed across rounds (e.g. re-running exactly the
-    // r14 146-query list at a later HEAD to separate per-pass board
-    // contention from real per-query regression). Unknown names fail
-    // loudly — a silently-dropped name would fake an improvement.
-    val only: Option[Set[String]] = sys.env.get("SPARK_GRAFT_ONLY").map { v =>
-      val raw =
-        if (v.contains("/"))
-          scala.jdk.CollectionConverters.ListHasAsScala(
-            java.nio.file.Files.readAllLines(java.nio.file.Paths.get(v)))
-            .asScala.toSeq
-        else v.split(",").toSeq
-      val set = raw.map(_.trim).filter(_.nonEmpty).toSet
-      // an empty/whitespace value (or a file of blank lines) would
-      // otherwise run a zero-query board — and could bank a quiet
-      // 0-query "record" (r16 ADVICE)
-      require(set.nonEmpty, "SPARK_GRAFT_ONLY is set but names no queries")
-      val unknown = set -- SparkEntry.queries.keySet
-      require(unknown.isEmpty, s"SPARK_GRAFT_ONLY names not in SparkEntry" +
-        s".queries: ${unknown.toSeq.sorted.mkString(", ")}")
-      set
-    }
+    // subset ([[SparkEntry.onlyQueries]]). Built for A/B runs that hold
+    // the SURFACE fixed across rounds (e.g. re-running exactly the r14
+    // 146-query list at a later HEAD to separate per-pass board
+    // contention from real per-query regression).
+    val only: Option[Set[String]] =
+      sys.env.get("SPARK_GRAFT_ONLY").map(SparkEntry.onlyQueries)
     // BENCH-BOARD BUDGET (r15 verdict Next #7 — the policy, written
     // BEFORE the tier hit 20): the single-rep certification tier is
     // capped at 16 lifecycles per invocation. When a new family's certs

@@ -89,7 +89,7 @@ object PlanDump {
     "q151_shard_write",     // span assembly: rows ≈ docs+straddlers, no tokens
     "q156_image_neardup_wide", // 16-key banded join + zip_with 256-bit verify
     "q159_video_neardup",   // (frame, block) keys + aligned-frame verify agg
-    "q160_image_dedup_retention", // GraphX CC + WindowGroupLimit keep-best
+    "q160_image_dedup_retention", // Δ-loop CC + WindowGroupLimit keep-best
     "q165_curated_shards")  // keep-verdict semi-join + q151's span sink
   /** Every NON-audited query with its one-line plan-shape
     * classification — a shape-duplicate of an audited section, a
@@ -135,7 +135,7 @@ object PlanDump {
     "q53_eval_frozen" -> "row-local frozen-head scoring + one confusion agg",
     "q54_ann_recall_kmeans" -> "q45's serving tail + q101's recall join",
     "q57_quality_filter" -> "percentile band: one window pass over row-local scores",
-    "q58_dedup_groups" -> "GraphX HashMin CC — q86's bounded-round shape on RDDs",
+    "q58_dedup_groups" -> "q86's HashMin Δ-loop, run to convergence",
     "q59_sketch_profile" -> "constant-memory sketch aggs, one exchange",
     "q60_quantiles_select" -> "q50's shape over selected keys",
     "q90_fuzzy_groups" -> "q89's deletion-variant join + q86-class CC grouping",
@@ -678,13 +678,8 @@ object PlanDump {
           // rounds materialise behind per-round checkpoints, so the query's
           // own plan is a checkpoint scan — audit ONE lazy round instead
           // (the plan every round's checkpoint executes)
-          import org.apache.spark.sql.functions.col
-          val fwd = Tables.load(spark, sfDir, "lineitem")
-            .select((col("l_partkey") * 2).as("src"),
-              (col("l_suppkey") * 2 + 1).as("dst")).distinct()
           graft.graph.Analytics.pageRankFixed(
-            fwd.unionByName(fwd.select(col("dst").as("src"), col("src").as("dst"))),
-            iters = 1, checkpoint = false)
+            SparkEntry.partSupplierEdges(spark, sfDir), iters = 1, checkpoint = false)
         } else if (name == "q74_triangles")
           // the entry consumes the memoised triangle frame (a checkpoint
           // scan) — audit the live enumeration WITH checkpoint on, so the
@@ -712,20 +707,15 @@ object PlanDump {
           graft.ext.Fuzzy.editOnePairs(
             Tables.load(spark, sfDir, "customer"), "c_custkey", "c_name")
         else if (name == "q92_bfs_hops") {
-          import org.apache.spark.sql.functions.{asc, col, count, desc, lit}
           val pp = SparkEntry.partPairs(spark, sfDir)
-          val deg = pp.select(col("src").as("id"))
-            .union(pp.select(col("dst").as("id")))
-            .groupBy("id").agg(count(lit(1)).as("deg"))
-          graft.graph.Analytics.bfsBounded(
-            pp, deg.orderBy(desc("deg"), asc("id")).limit(10).select("id"),
+          graft.graph.Analytics.bfsBounded(pp, SparkEntry.hubSeeds(pp, "src", "dst"),
             rounds = 1, checkpoint = false, assumeCanonical = true)
         } else if (name == "q94_sssp_support") {
           // rounds checkpoint like the q73/q86 family — audit ONE lazy
           // Δ-relaxation (the plan every round's checkpoint executes),
           // over the lazily-built weighted pair list (the entry memoises
           // it behind a checkpoint shared with q79/q83)
-          import org.apache.spark.sql.functions.{asc, col, count, desc, expr, lit}
+          import org.apache.spark.sql.functions.{col, count, expr, lit}
           val li = Tables.load(spark, sfDir, "lineitem")
             .select(col("l_orderkey").as("bk"), col("l_partkey").as("it"))
             .distinct()
@@ -733,12 +723,9 @@ object PlanDump {
             .filter(col("it") < col("it2"))
             .groupBy(col("it").as("a"), col("it2").as("b"))
             .agg(count(lit(1)).as("w"))
-          val deg = w.select(col("a").as("id"))
-            .union(w.select(col("b").as("id")))
-            .groupBy("id").agg(count(lit(1)).as("deg"))
           graft.graph.Analytics.ssspBounded(
             w.select(col("a"), col("b"), expr("1000000L div w").as("cost")),
-            deg.orderBy(desc("deg"), asc("id")).limit(10).select("id"),
+            SparkEntry.hubSeeds(w, "a", "b"),
             srcCol = "a", dstCol = "b", rounds = 1,
             checkpoint = false, assumeCanonical = true)
         } else if (name == "q85_bm25")

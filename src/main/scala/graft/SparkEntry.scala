@@ -90,6 +90,32 @@ object SparkEntry {
         .select(col("a").as("src"), col("b").as("dst"))
     }
 
+  /** The part↔supplier purchase graph: disjoint even (part) and odd
+    * (supplier) node ids, distinct edges in both directions — q73's
+    * PageRank and q123's PPR run on it. */
+  private[graft] def partSupplierEdges(s: SparkSession, dir: String): DataFrame = {
+    val fwd = t(s, dir, "lineitem")
+      .select((col("l_partkey") * 2).as("src"),
+        (col("l_suppkey") * 2 + 1).as("dst")).distinct()
+    fwd.unionByName(fwd.select(col("dst").as("src"), col("src").as("dst")))
+  }
+
+  /** The 10 hottest nodes of an undirected pair list (degree desc, id
+    * tie-break) — the seed set q92 and q94 share. */
+  private[graft] def hubSeeds(pairs: DataFrame, a: String, b: String): DataFrame =
+    pairs.select(col(a).as("id")).union(pairs.select(col(b).as("id")))
+      .groupBy("id").agg(count(lit(1)).as("deg"))
+      .orderBy(desc("deg"), asc("id")).limit(10).select("id")
+
+  /** q44's exact near-dup text pairs collapsed into groups
+    * ([[graft.ext.Dedup.dedupGroups]]) — the component frame q58, q97,
+    * q111, q130 and q139 build on. */
+  private def textDupGroups(s: SparkSession, dir: String): DataFrame = {
+    val docs = t(s, dir, "documents")
+    graft.ext.Dedup.dedupGroups(docs.select(col("doc_id")),
+      graft.ext.Dedup.nearDupJaccardExact(docs, "doc_id", "text"))
+  }
+
   /** Exact order-independent sum of a 2-dp double column, as double. */
   private def dsum(c: Column): Column =
     sum(c.cast(DecimalType(18, 2))).cast("double")
@@ -358,6 +384,15 @@ r2o AS (
       " through binding arbitration contact support email address" +
       " listed below copyright reserved trademark owned respective holders"
 
+  /** Image dedup retention: q154's dHash pairs → dup groups → the
+    * highest-n_chars doc per group, smallest id on ties (q160, and
+    * q164's image leg). */
+  private def imageRetention(s: SparkSession, dir: String): DataFrame =
+    graft.ext.Dedup.canonicalDocs(
+      graft.ext.Dedup.dedupGroups(t(s, dir, "documents").select(col("doc_id")),
+        graft.multimodal.ImageDedup.nearDupFromHashes(pgmDHashed(s, dir))(s)),
+      t(s, dir, "documents").select(col("doc_id"), col("n_chars")), "n_chars")
+
   /** q164's end-to-end curation VERDICT frame (text gate × image
     * retention × audio first-seen — the q164 scaladoc has the legs),
     * memoised per (session, sf dir) and eagerly checkpointed — the
@@ -372,11 +407,7 @@ r2o AS (
       val gate = graft.ext.Filters.gopherGate(
           t(s, dir, "documents"), "doc_id", "text")
         .select(col("doc_id"), col("keep").as("text_keep"))
-      val groups = graft.ext.Dedup.dedupGroups(ids,
-        graft.multimodal.ImageDedup.nearDupFromHashes(pgmDHashed(s, dir)))
-      val kept = graft.ext.Dedup.canonicalDocs(groups,
-          t(s, dir, "documents").select(col("doc_id"), col("n_chars")),
-          "n_chars")
+      val kept = imageRetention(s, dir)
         .select(col("kept_doc").as("doc_id"), lit(1L).as("image_keep"))
       val audioDrop = graft.multimodal.AudioDedup.nearDupAudio(
           graft.multimodal.MediaSynth.withWavMotifPayload(ids, "doc_id"),
@@ -402,6 +433,26 @@ r2o AS (
     GraphBuilder.edgeFrame(t(s, dir, "orders"), spec,
       GraphBuilder.denseIds(t(s, dir, "orders"), "o_orderkey"),
       GraphBuilder.denseIds(t(s, dir, "customer"), "c_custkey"))
+  }
+
+  /** The query subset a `SPARK_GRAFT_ONLY` value names, for Bench and
+    * Verify: a comma-separated list of full query names, or (when the
+    * value contains a '/') a file of newline-separated names. Empty or
+    * unknown names fail loudly — a silently dropped name would fake a
+    * Bench improvement or an empty, "0 fail" oracle check. */
+  def onlyQueries(spec: String): Set[String] = {
+    val raw =
+      if (spec.contains("/"))
+        scala.jdk.CollectionConverters.ListHasAsScala(
+          java.nio.file.Files.readAllLines(java.nio.file.Paths.get(spec)))
+          .asScala.toSeq
+      else spec.split(",").toSeq
+    val set = raw.map(_.trim).filter(_.nonEmpty).toSet
+    require(set.nonEmpty, "SPARK_GRAFT_ONLY is set but names no queries")
+    val unknown = set -- queries.keySet
+    require(unknown.isEmpty, "SPARK_GRAFT_ONLY names not in SparkEntry" +
+      s".queries: ${unknown.toSeq.sorted.mkString(", ")}")
+    set
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -893,28 +944,19 @@ r2o AS (
       t(s, dir, "documents").select(col("doc_id"),
         graft.ext.Dedup.rollingFingerprint(col("text")).as("fp"))),
     // entity-resolution tier of the dedup family: collapse near-dup PAIRS
-    // (q44's provably-complete prefix-filter join) into GROUPS via GraphX
-    // connectedComponents — Pregel min-label propagation, the scalable CC
-    // (O(diameter) rounds over a partitioned edge RDD; a DataFrame
-    // min-propagation loop would re-plan per round). Emits every doc's
-    // canonical id (min doc_id of its component; singletons stay their
-    // own canon) — filtering `doc_id = canon_id` IS the dedup. Oracle:
-    // the same pairs + a recursive-CTE transitive closure (tractable at
-    // oracle scale; the GraphX side is the 100 TB path).
-    "q58_dedup_groups" -> ((s, dir) =>
-      graft.ext.Dedup.dedupGroups(
-        t(s, dir, "documents").select(col("doc_id")),
-        graft.ext.Dedup.nearDupJaccardExact(
-          t(s, dir, "documents"), "doc_id", "text"))),
+    // (q44's provably-complete prefix-filter join) into GROUPS via
+    // converged connected components — q86's min-label Δ-loop with no
+    // round bound. Emits every doc's canonical id (min doc_id of its
+    // component; singletons stay their own canon) — filtering
+    // `doc_id = canon_id` IS the dedup. Oracle: the same pairs + 16
+    // unrolled HashMin rounds (dedupGroupsCtes).
+    "q58_dedup_groups" -> ((s, dir) => textDupGroups(s, dir)),
     // dedup TELEMETRY (the report a curation run ships): the component
     // size histogram over q58's canonical groups — how many singletons,
     // pairs, triples… the near-dup pass found. Rides the memoised
     // component chain; two map-side-combined aggregates on top.
     "q130_dedup_report" -> ((s, dir) =>
-      graft.ext.Dedup.dedupGroups(
-        t(s, dir, "documents").select(col("doc_id")),
-        graft.ext.Dedup.nearDupJaccardExact(
-          t(s, dir, "documents"), "doc_id", "text"))
+      textDupGroups(s, dir)
         .groupBy("canon_id").agg(count(lit(1)).as("grp_size"))
         .groupBy("grp_size").agg(count(lit(1)).as("n_groups"))),
     // 100 TB profiling sketches, machine-checked: the raw one-pass
@@ -1152,8 +1194,8 @@ r2o AS (
       graft.ext.Ranking.bm25TopTerms(
         t(s, dir, "documents"), "doc_id", "text", k = 3)),
     // bounded HashMin connected components (5 min-label rounds) over
-    // the co-purchase graph — the DataFrame-native recurrence twin of
-    // q58's converged GraphX components, exact for components of
+    // the co-purchase graph — the bounded twin of q58's converged
+    // components (the same Δ-loop), exact for components of
     // diameter ≤ 5, oracle-unrolled like the q76/q77 family
     "q86_cc_bounded" -> ((s, dir) =>
       graft.graph.Analytics.connectedComponentsBounded(
@@ -1208,12 +1250,8 @@ r2o AS (
     // textbook frontier rounds, oracle-unrolled layers
     "q92_bfs_hops" -> ((s, dir) => {
       val pp = partPairs(s, dir)
-      val deg = pp.select(col("src").as("id"))
-        .union(pp.select(col("dst").as("id")))
-        .groupBy("id").agg(count(lit(1)).as("deg"))
-      val seeds = deg.orderBy(desc("deg"), asc("id")).limit(10).select("id")
       graft.graph.Analytics.bfsBounded(
-        pp, seeds, rounds = 3, assumeCanonical = true)
+        pp, hubSeeds(pp, "src", "dst"), rounds = 3, assumeCanonical = true)
     }),
     // bounded weighted shortest paths (3 Bellman-Ford relaxations) from
     // the same 10 hubs as q92, over the co-purchase graph with integer
@@ -1224,13 +1262,9 @@ r2o AS (
     // and both rides share the memoised pair build
     "q94_sssp_support" -> ((s, dir) => {
       val pw = partPairsWeighted(s, dir)
-      val deg = pw.select(col("a").as("id"))
-        .union(pw.select(col("b").as("id")))
-        .groupBy("id").agg(count(lit(1)).as("deg"))
-      val seeds = deg.orderBy(desc("deg"), asc("id")).limit(10).select("id")
       graft.graph.Analytics.ssspBounded(
         pw.select(col("a"), col("b"), expr("1000000L div w").as("cost")),
-        seeds, srcCol = "a", dstCol = "b", rounds = 3,
+        hubSeeds(pw, "a", "b"), srcCol = "a", dstCol = "b", rounds = 3,
         assumeCanonical = true)
     }),
     // distribution drift between the stream's first two weeks (ext.Drift):
@@ -1271,15 +1305,11 @@ r2o AS (
     // components collapsed to their best representative — highest
     // n_chars, doc_id tiebreak — with exact group totals; the winner
     // rank plans as WindowGroupLimit so hot groups never materialise
-    "q97_canonical_docs" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val groups = graft.ext.Dedup.dedupGroups(
-        docs.select(col("doc_id")),
-        graft.ext.Dedup.nearDupJaccardExact(docs, "doc_id", "text"))
-      graft.ext.Dedup.canonicalDocs(groups,
-        docs.select(col("doc_id"), col("n_chars").cast("long").as("quality")),
-        "quality")
-    }),
+    "q97_canonical_docs" -> ((s, dir) =>
+      graft.ext.Dedup.canonicalDocs(textDupGroups(s, dir),
+        t(s, dir, "documents")
+          .select(col("doc_id"), col("n_chars").cast("long").as("quality")),
+        "quality")),
     // JL random projection to 8 dims with ±1 signs (ext.Projection,
     // Achlioptas 2003) — the cheap-sketch reduction before prefiltering
     // or routing; the DetRandom-derived sign matrix is dims×8 constants
@@ -1485,13 +1515,8 @@ r2o AS (
     // part↔supplier purchase graph — disjoint even/odd node id spaces,
     // symmetrized distinct edges, dangling mass dropped; the oracle
     // replays the exact recurrence with unrolled CTEs
-    "q73_pagerank" -> ((s, dir) => {
-      val fwd = t(s, dir, "lineitem")
-        .select((col("l_partkey") * 2).as("src"),
-          (col("l_suppkey") * 2 + 1).as("dst")).distinct()
-      graft.graph.Analytics.pageRankFixed(
-        fwd.unionByName(fwd.select(col("dst").as("src"), col("src").as("dst"))))
-    }),
+    "q73_pagerank" -> ((s, dir) =>
+      graft.graph.Analytics.pageRankFixed(partSupplierEdges(s, dir))),
     // PERSONALIZED PageRank (graph.Analytics.personalizedPageRankFixed,
     // topic-sensitive PPR): restart mass lands only on a seed set (every
     // 50th part node of q73's bipartite graph), so rank concentrates in
@@ -1499,11 +1524,7 @@ r2o AS (
     // neighbour-selection primitive. Broadcast seed indicator; each
     // round moves only the nonzero frontier.
     "q123_ppr" -> ((s, dir) => {
-      val fwd = t(s, dir, "lineitem")
-        .select((col("l_partkey") * 2).as("src"),
-          (col("l_suppkey") * 2 + 1).as("dst")).distinct()
-      val edges = fwd.unionByName(
-        fwd.select(col("dst").as("src"), col("src").as("dst")))
+      val edges = partSupplierEdges(s, dir)
       val seeds = edges.select(col("src").as("id")).distinct()
         .filter(col("id") % 100 === 0)
       graft.graph.Analytics.personalizedPageRankFixed(edges, seeds)
@@ -2760,25 +2781,16 @@ r2o AS (
     }),
     // IMAGE dedup RETENTION (cross-family composition: the multimodal
     // pair generator feeding the text path's entity-resolution +
-    // retention machinery): q154's dHash pairs → GraphX
-    // connectedComponents (Dedup.dedupGroups — Pregel min-label, the
-    // scalable CC) → Dedup.canonicalDocs keeps the highest-n_chars doc
+    // retention machinery): q154's dHash pairs → converged connected
+    // components (Dedup.dedupGroups, the min-label Δ-loop) →
+    // Dedup.canonicalDocs keeps the highest-n_chars doc
     // per duplicate group (ties to the smallest id), with the group's
     // n_docs/sum_quality audit columns — what a multimodal curation run
     // actually ships: one surviving image per near-dup cluster plus the
     // mass it absorbed. Rides the memoised q154 decode+hash pass; the
     // oracle replays the pair pipeline + 16 unrolled HashMin rounds
     // (the q58 oracle treatment) + the same rank/aggregate tail.
-    "q160_image_dedup_retention" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      val pairs = graft.multimodal.ImageDedup.nearDupFromHashes(
-        pgmDHashed(s, dir))
-      graft.ext.Dedup.canonicalDocs(
-        graft.ext.Dedup.dedupGroups(
-          t(s, dir, "documents").select(col("doc_id")), pairs),
-        t(s, dir, "documents").select(col("doc_id"), col("n_chars")),
-        "n_chars")
-    }),
+    "q160_image_dedup_retention" -> ((s, dir) => imageRetention(s, dir)),
     // deterministic random-walk corpus (learn.Walks): 2 DeepWalk-style
     // uniform walks of 4 steps from every co-purchase node — the
     // "sentences" a skip-gram node-embedding trainer consumes, the other
@@ -2885,13 +2897,10 @@ r2o AS (
     // duplicate-aware SAMPLING WEIGHTS (count every near-dup cluster
     // once — Lee et al. 2022's dedup-for-LM correction as a soft
     // weighting instead of a hard drop): per doc, its q58 cluster size
-    // and the inverse-size weight in exact ppm. Rides the memoised pair
-    // build + the bounded-round closure; one size aggregate + one join.
+    // and the inverse-size weight in exact ppm. Rides q58's component
+    // frame; one size aggregate + one join.
     "q139_dup_weights" -> ((s, dir) => {
-      val groups = graft.ext.Dedup.dedupGroups(
-        t(s, dir, "documents").select(col("doc_id")),
-        graft.ext.Dedup.nearDupJaccardExact(
-          t(s, dir, "documents"), "doc_id", "text"))
+      val groups = textDupGroups(s, dir)
       val sizes = groups.groupBy("canon_id")
         .agg(count(lit(1)).as("grp_size"))
       groups.join(sizes, Seq("canon_id"))
@@ -3454,14 +3463,8 @@ r2o AS (
     // ever straddles splits — the defence against eval contamination a
     // doc_id hash split structurally lacks. Pure row-local projection
     // over q58's component frame; the split itself adds zero exchanges.
-    "q111_leak_safe_split" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      graft.ext.Dedup.leakSafeSplit(
-        graft.ext.Dedup.dedupGroups(
-          docs.select(col("doc_id")),
-          graft.ext.Dedup.nearDupJaccardExact(docs, "doc_id", "text")),
-        seed = 42L)
-    }),
+    "q111_leak_safe_split" -> ((s, dir) =>
+      graft.ext.Dedup.leakSafeSplit(textDupGroups(s, dir), seed = 42L)),
     // point-in-time (as-of) join: attach each event to the user's most
     // recent STRICTLY-prior purchase event (attribution) — union + one
     // window pass, one shuffle on the key, no range join (ext.AsOf).
@@ -3712,7 +3715,7 @@ r2o AS (
     *
     * The closure is [[dedupGroupsOracleRounds]] UNROLLED rounds of
     * `lbl ← min(lbl, min over in-neighbors' lbl)` — the exact recurrence
-    * the engine's GraphX `connectedComponents` iterates — instead of the
+    * the engine's min-label Δ-loop iterates — instead of the
     * r7 recursive CTE, whose all-pairs `reach` set is quadratic in
     * component size (DuckDB ground >35 min at sf0.1; SCALE_r7.md). Each
     * round costs one |E| join + a group-min, so the oracle now tracks
@@ -4693,9 +4696,9 @@ r2o AS (
     "q144_stream_dedup_evict" -> (jaccardPairsSql + """
       |  AND NOT ((a.doc_id % 3 = 0 AND b.doc_id % 3 = 2)
       |        OR (a.doc_id % 3 = 2 AND b.doc_id % 3 = 0))""".stripMargin),
-    // transitive closure of the near-dup pairs (recursive CTE; UNION
-    // dedups, so the fixpoint terminates), canon = min over self + all
-    // reachable docs — the SQL twin of GraphX min-label propagation.
+    // closure of the near-dup pairs by unrolled HashMin rounds, canon =
+    // min over self + all reachable docs — the SQL twin of
+    // Dedup.dedupGroups' min-label Δ-loop.
     "q58_dedup_groups" ->
       s"""$dedupGroupsCtes
         |SELECT doc_id, canon_id FROM g""".stripMargin,

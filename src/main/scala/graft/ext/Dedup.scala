@@ -708,13 +708,13 @@ object Dedup {
   }
 
   /** Canonical-id assignment over near-dup PAIRS — the entity-resolution
-    * step after any of the pair generators: connected components via
-    * GraphX (Pregel min-label propagation, O(diameter) rounds over a
-    * partitioned edge RDD — the scalable CC; a DataFrame min-propagation
-    * loop would re-plan and re-shuffle per round). Every id in `ids` gets
-    * `canon_id` = the minimum id of its component (singletons map to
-    * themselves); filtering `id = canon_id` keeps one canonical document
-    * per duplicate group.
+    * step after any of the pair generators: converged connected
+    * components, run as [[graft.graph.Analytics.relax]]'s min-label
+    * Δ-loop with no round bound (it stops on the first round that
+    * changes no label, after diameter-many rounds). Every id in `ids`,
+    * and every pair endpoint, gets `canon_id` = the minimum id of its
+    * component (singletons map to themselves); filtering
+    * `id = canon_id` keeps one canonical document per duplicate group.
     *
     * @param ids   one LONG id per document (column `doc_id`)
     * @param pairs near-dup pairs (`doc_a`, `doc_b`), e.g. from
@@ -722,17 +722,15 @@ object Dedup {
     * @return (doc_id, canon_id)
     */
   def dedupGroups(ids: DataFrame, pairs: DataFrame): DataFrame = {
-    val spark = ids.sparkSession
-    import spark.implicits._
-    val vertices = ids.select(col("doc_id").cast("long")).as[Long]
-      .rdd.map(id => (id, ()))
-    val edges = pairs
-      .select(col("doc_a").cast("long"), col("doc_b").cast("long"))
-      .as[(Long, Long)].rdd
-      .map { case (a, b) => org.apache.spark.graphx.Edge(a, b, ()) }
-    org.apache.spark.graphx.Graph(vertices, edges)
-      .connectedComponents().vertices
-      .toDF("doc_id", "canon_id")
+    val id = col("doc_id").cast("long")
+    graft.graph.Analytics.relax(
+        pairs.select(col("doc_a").cast("long").as("a"),
+          col("doc_b").cast("long").as("b")),
+        sym => graft.graph.Analytics.ownLabels(sym)
+          .union(ids.select(id.as("id"), id.as("x"))),
+        lit(0L), rounds = Int.MaxValue, checkpoint = true,
+        broadcastStateBelow = 4000000L)
+      .select(col("id").as("doc_id"), col("x").as("canon_id"))
   }
 
   /** Canonical-DOCUMENT selection: collapse each [[dedupGroups]]

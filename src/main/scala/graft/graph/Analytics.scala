@@ -1,6 +1,7 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 
 /** Whole-graph analytics over plain edge lists — the graph-measure tier
@@ -24,21 +25,47 @@ object Analytics {
     * and cheap to rescan — e.g. a memoised, checkpointed frame shared
     * by several analytics over the same graph (q74/q76/q77/q78 share
     * one co-purchase edge list that way); the operators then add no
-    * barrier of their own for it. */
+    * barrier of their own for it. With `costCol`, each pair keeps a
+    * long cost `c`, and multi-edges collapse to their MINIMUM cost. */
   private def canonical(
       edges: DataFrame, srcCol: String, dstCol: String,
-      assume: Boolean): DataFrame =
+      assume: Boolean, costCol: Option[String] = None): DataFrame = {
+    val c = costCol.map(col(_).cast("long").as("c")).toSeq
     if (assume)
-      edges.select(col(srcCol).cast("long").as("a"),
-        col(dstCol).cast("long").as("b"))
-    else
-      edges.select(
+      edges.select(Seq(col(srcCol).cast("long").as("a"),
+        col(dstCol).cast("long").as("b")) ++ c: _*)
+    else {
+      val e = edges.select(Seq(
           least(col(srcCol), col(dstCol)).cast("long").as("a"),
-          greatest(col(srcCol), col(dstCol)).cast("long").as("b"))
-        .filter(col("a") =!= col("b")).distinct()
+          greatest(col(srcCol), col(dstCol)).cast("long").as("b")) ++ c: _*)
+        .filter(col("a") =!= col("b"))
+      if (costCol.isEmpty) e.distinct()
+      else e.groupBy("a", "b").agg(min(col("c")).as("c"))
+    }
+  }
+
+  /** Both directions `(u, v, …)` of a canonical `(a, b, …)` edge list;
+    * any further columns ride along unchanged. */
+  private def symmetrise(e0: DataFrame): DataFrame = {
+    val rest = e0.columns.filterNot(Set("a", "b")).map(col).toSeq
+    e0.select(col("a").as("u") +: col("b").as("v") +: rest: _*)
+      .union(e0.select(col("b").as("u") +: col("a").as("v") +: rest: _*))
+  }
+
+  /** The per-round barrier: coalesce to the session's shuffle parallelism
+    * and `localCheckpoint` eagerly, so round r's plan never re-derives
+    * rounds 1..r−1 (see [[graft.learn.Propagate]]'s barrier scaladoc for
+    * why repartitioning here would be a wasted exchange under AQE).
+    * `checkpoint=false` keeps every round lazy — plan audits only
+    * (PlanDump dumps the full round lineage that the checkpoints
+    * otherwise execute). */
+  private def pinner(edges: DataFrame, checkpoint: Boolean): DataFrame => DataFrame = {
+    val parts = edges.sparkSession.sessionState.conf.numShufflePartitions
+    df => if (checkpoint) df.coalesce(parts).localCheckpoint(eager = true) else df
+  }
 
   /** Gated broadcast hint for the per-round |V|-scale state side of the
-    * bounded-round family (ranks, labels, frontiers, Δ sets, survivor
+    * bounded-round family (ranks, labels, distances, Δ sets, survivor
     * sets). Every round joins the pinned |E| frame against a state
     * frame that is at most |V| rows — but checkpointed frames carry no
     * size statistics, so Catalyst plans a SortMergeJoin and every round
@@ -56,6 +83,27 @@ object Analytics {
     if (checkpoint && below > 0L && edgeCount <= below)
       (df: DataFrame) => broadcast(df)
     else identity[DataFrame] _
+
+  /** The prelude every round loop shares: the |E| frame pinned once
+    * behind the barrier, the barrier itself, and the state hint gated on
+    * the pinned frame's row count (one job over the cached partitions;
+    * `Dataset.count` would add an aggregation stage). */
+  private final case class Rounds(
+      edges: DataFrame, pin: DataFrame => DataFrame, st: DataFrame => DataFrame)
+
+  private def prelude(
+      edges: DataFrame, checkpoint: Boolean, broadcastStateBelow: Long): Rounds = {
+    val pin = pinner(edges, checkpoint)
+    val e = pin(edges)
+    Rounds(e, pin,
+      stateHint(e.queryExecution.toRdd.count(), checkpoint, broadcastStateBelow))
+  }
+
+  /** One job, one trivial task per partition: does `df` hold a row? */
+  private def nonEmpty(df: DataFrame): Boolean =
+    df.sparkSession.sparkContext
+      .runJob(df.queryExecution.toRdd, (it: Iterator[InternalRow]) => it.hasNext)
+      .contains(true)
 
   /** Fixed-point PageRank: `iters` synchronous rounds of
     * `r'(v) = base + Σ_{u→v} (αN·r(u)) div (αD·outdeg(u))` over scaled
@@ -85,20 +133,14 @@ object Analytics {
     * digits.)
     *
     * Scale shape: the edge frame joins its out-degree ONCE and is pinned
-    * behind an eager `localCheckpoint` (coalesced to the session's
-    * shuffle parallelism — see [[graft.learn.Propagate]]'s barrier
-    * scaladoc for why repartitioning here would be a wasted exchange
-    * under AQE). Each round is one |E|-side join + one `groupBy(dst)`
-    * whose partial sum combines map-side, so the aggregation exchange
-    * moves O(|V|·partitions) not O(|E|); the node frame re-joining each
-    * round is |V|-scale. Exchange-free rounds on the |E| side need a
-    * persisted bucketed layout, exactly as propagation does
-    * ([[HeteroGraph.saveBucketed]]).
-    *
-    * `checkpoint=false` keeps every round lazy — plan audits only
-    * (PlanDump dumps the full round lineage that the checkpoints
-    * otherwise execute); the default materialises each round, without
-    * which round r's plan re-derives rounds 1..r−1. */
+    * behind the round barrier ([[pinner]]). Each round is one |E|-side
+    * join + one `groupBy(dst)` whose partial sum combines map-side, so
+    * the aggregation exchange moves O(|V|·partitions) not O(|E|); the
+    * node frame re-joining each round is |V|-scale. Exchange-free rounds
+    * on the |E| side need a persisted bucketed layout, exactly as
+    * propagation does ([[HeteroGraph.saveBucketed]]). This is
+    * [[personalizedPageRankFixed]] with every node a seed — one rank
+    * loop runs both. */
   def pageRankFixed(
       edges: DataFrame,
       srcCol: String = "src",
@@ -109,37 +151,9 @@ object Analytics {
       alphaDen: Long = 20L,
       checkpoint: Boolean = true,
       weightCol: Option[String] = None,
-      broadcastStateBelow: Long = 4000000L): DataFrame = {
-    require(iters >= 1, s"iters must be >= 1: $iters")
-    require(alphaDen > alphaNum && alphaNum > 0,
-      s"need 0 < alphaNum < alphaDen: $alphaNum/$alphaDen")
-    val parts = edges.sparkSession.sessionState.conf.numShufflePartitions
-    def pin(df: DataFrame): DataFrame =
-      if (checkpoint) df.coalesce(parts).localCheckpoint(eager = true) else df
-    val e = edges.select(
-      col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"),
-      weightCol.map(c => col(c).cast("long")).getOrElse(lit(1L)).as("w"))
-    val deg = e.groupBy("src").agg(sum(col("w")).as("deg"))
-    val eDeg = pin(e.join(deg, Seq("src")))
-    val nodes = pin(e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct())
-    val st = stateHint(eDeg.count(), checkpoint, broadcastStateBelow)
-    val base = (alphaDen - alphaNum) * scale / alphaDen
-    var r = nodes.select(col("id"), lit(scale).as("r"))
-    for (_ <- 1 to iters) {
-      val contrib = eDeg
-        .join(st(r.select(col("id").as("src"), col("r"))), Seq("src"))
-        .select(col("dst"),
-          expr(s"${alphaNum}L * r * w div (${alphaDen}L * deg)").as("c"))
-        .groupBy("dst").agg(sum("c").as("c"))
-      r = pin(nodes
-        .join(st(contrib.select(col("dst").as("id"), col("c"))),
-          Seq("id"), "left")
-        .select(col("id"), (lit(base) + coalesce(col("c"), lit(0L))).as("r")))
-      // ^ per-round barrier truncates lineage (Propagate's barrier scaladoc)
-    }
-    r.select(col("id").as("node_id"), col("r").cast("long").as("rank_fp"))
-  }
+      broadcastStateBelow: Long = 4000000L): DataFrame =
+    rankLoop(edges, srcCol, dstCol, weightCol.map(col).getOrElse(lit(1L)),
+      None, iters, scale, alphaNum, alphaDen, checkpoint, broadcastStateBelow)
 
   /** PERSONALIZED PageRank over scaled integers — the random walk
     * restarts at a SEED SET instead of everywhere (topic-sensitive
@@ -168,35 +182,46 @@ object Analytics {
       alphaNum: Long = 17L,
       alphaDen: Long = 20L,
       checkpoint: Boolean = true,
-      broadcastStateBelow: Long = 4000000L): DataFrame = {
+      broadcastStateBelow: Long = 4000000L): DataFrame =
+    rankLoop(edges, srcCol, dstCol, lit(1L),
+      Some(seeds.select(col(seedCol).cast("long").as("id")).distinct()),
+      iters, scale, alphaNum, alphaDen, checkpoint, broadcastStateBelow)
+
+  /** The rank loop behind both PageRanks: `seed(v) = 1` for every node
+    * when `seeds` is `None`, else for the seed set only. Unweighted
+    * ranks are the `w = 1` case, so `deg` is the out-edge count. */
+  private def rankLoop(
+      edges: DataFrame, srcCol: String, dstCol: String, weight: Column,
+      seeds: Option[DataFrame], iters: Int, scale: Long,
+      alphaNum: Long, alphaDen: Long,
+      checkpoint: Boolean, broadcastStateBelow: Long): DataFrame = {
     require(iters >= 1, s"iters must be >= 1: $iters")
     require(alphaDen > alphaNum && alphaNum > 0,
       s"need 0 < alphaNum < alphaDen: $alphaNum/$alphaDen")
-    val parts = edges.sparkSession.sessionState.conf.numShufflePartitions
-    def pin(df: DataFrame): DataFrame =
-      if (checkpoint) df.coalesce(parts).localCheckpoint(eager = true) else df
     val e = edges.select(
-      col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-    val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    val eDeg = pin(e.join(deg, Seq("src")))
+      col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"),
+      weight.cast("long").as("w"))
+    val deg = e.groupBy("src").agg(sum(col("w")).as("deg"))
+    val p = prelude(e.join(deg, Seq("src")), checkpoint, broadcastStateBelow)
     val nodes = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct()
-    val sd = seeds.select(col(seedCol).cast("long").as("id")).distinct()
-    val nodeSeed = pin(nodes
-      .join(broadcast(sd.withColumn("__s", lit(1L))), Seq("id"), "left")
-      .select(col("id"), coalesce(col("__s"), lit(0L)).as("seed")))
-    val st = stateHint(eDeg.count(), checkpoint, broadcastStateBelow)
+    val nodeSeed = p.pin(seeds match {
+      case None => nodes.select(col("id"), lit(1L).as("seed"))
+      case Some(sd) => nodes
+        .join(broadcast(sd.withColumn("__s", lit(1L))), Seq("id"), "left")
+        .select(col("id"), coalesce(col("__s"), lit(0L)).as("seed"))
+    })
     val base = (alphaDen - alphaNum) * scale / alphaDen
     var r = nodeSeed.select(col("id"), (col("seed") * scale).as("r"))
     for (_ <- 1 to iters) {
-      val contrib = eDeg
-        .join(st(r.filter(col("r") =!= 0L)
+      val contrib = p.edges
+        .join(p.st(r.filter(col("r") =!= 0L)
           .select(col("id").as("src"), col("r"))), Seq("src"))
         .select(col("dst"),
-          expr(s"${alphaNum}L * r div (${alphaDen}L * deg)").as("c"))
+          expr(s"${alphaNum}L * r * w div (${alphaDen}L * deg)").as("c"))
         .groupBy("dst").agg(sum("c").as("c"))
-      r = pin(nodeSeed
-        .join(st(contrib.select(col("dst").as("id"), col("c"))),
+      r = p.pin(nodeSeed
+        .join(p.st(contrib.select(col("dst").as("id"), col("c"))),
           Seq("id"), "left")
         .select(col("id"),
           (col("seed") * base + coalesce(col("c"), lit(0L))).as("r")))
@@ -204,27 +229,6 @@ object Analytics {
     r.select(col("id").as("node_id"), col("r").cast("long").as("rank_fp"))
   }
 
-  /** Per-node triangle count and local clustering coefficient over an
-    * undirected simple graph: `(node_id, deg, tri_cnt, cc_fp)` with
-    * `cc_fp = (2·tri·ccScale) div (deg·(deg−1))` (0 when deg < 2) — all
-    * exact integers, replayed by q74's DuckDB oracle.
-    *
-    * The count uses DEGREE orientation (Chiba–Nishizeki / the MapReduce
-    * formulation of Suri & Vassilvitskii 2011): orient every edge from
-    * its lower-(deg, id) endpoint to the higher, enumerate wedges from
-    * each edge's shared TAIL, and close them against the oriented edge
-    * list. Out-degrees under this orientation are bounded by
-    * O(√|E|) (graph arboricity), so the wedge self-join is skew-robust:
-    * a 10^6-degree hub generates wedges at its *oriented* out-degree,
-    * not deg² — the property that makes the plan survive power-law
-    * graphs at 100 TB. Every step is an equi-join on edge keys (wedge
-    * closure joins on the (v,w) pair); the per-node count is one
-    * explode + map-side-combined groupBy.
-    *
-    * Input edges may be in either/both directions with duplicates; they
-    * are canonicalized (`least < greatest`, distinct, self-loops
-    * dropped) up front. `ccScale` bound: needs `2·tri·ccScale < 2^63`,
-    * i.e. per-node triangle counts below ~4.6·10^12 at the default 10^6. */
   /** Exact triangle LISTING: every closed triple `(u, v, w)` of the
     * undirected simple graph, via the degree orientation described at
     * [[triangleStats]] — itself a first-class operator (motif mining),
@@ -240,15 +244,9 @@ object Analytics {
       assumeCanonical: Boolean = false,
       checkpoint: Boolean = true,
       broadcastEdgesBelow: Long = 4000000L): DataFrame = {
-    val parts = edges.sparkSession.sessionState.conf.numShufflePartitions
-    def pin(df: DataFrame): DataFrame =
-      if (checkpoint) df.coalesce(parts).localCheckpoint(eager = true) else df
-    val e0 =
-      if (assumeCanonical) canonical(edges, srcCol, dstCol, assume = true)
-      else pin(canonical(edges, srcCol, dstCol, assume = false))
-    val deg = pin(e0.select(col("a").as("id"))
-      .union(e0.select(col("b").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("deg")))
+    val pin = pinner(edges, checkpoint)
+    val (e0, d) = canonicalDegrees(edges, srcCol, dstCol, assumeCanonical, pin)
+    val deg = pin(d)
     // orient low-(deg,id) → high; a<b canonically, so deg ties keep (a,b)
     val lt = col("da") < col("db") || (col("da") === col("db"))
     // The wedge set is O(Σ outdeg²) — arboricity-bounded but still the
@@ -324,6 +322,41 @@ object Analytics {
     }
   }
 
+  /** The canonical edge list (pinned unless the caller vouches for it)
+    * and its per-node degree `(id, deg)` — the front half of the
+    * triangle measures. */
+  private def canonicalDegrees(
+      edges: DataFrame, srcCol: String, dstCol: String,
+      assumeCanonical: Boolean,
+      pin: DataFrame => DataFrame): (DataFrame, DataFrame) = {
+    val e0 =
+      if (assumeCanonical) canonical(edges, srcCol, dstCol, assume = true)
+      else pin(canonical(edges, srcCol, dstCol, assume = false))
+    (e0, e0.select(col("a").as("id")).union(e0.select(col("b").as("id")))
+      .groupBy("id").agg(count(lit(1)).as("deg")))
+  }
+
+  /** Per-node triangle count and local clustering coefficient over an
+    * undirected simple graph: `(node_id, deg, tri_cnt, cc_fp)` with
+    * `cc_fp = (2·tri·ccScale) div (deg·(deg−1))` (0 when deg < 2) — all
+    * exact integers, replayed by q74's DuckDB oracle.
+    *
+    * The count uses DEGREE orientation (Chiba–Nishizeki / the MapReduce
+    * formulation of Suri & Vassilvitskii 2011): orient every edge from
+    * its lower-(deg, id) endpoint to the higher, enumerate wedges from
+    * each edge's shared TAIL, and close them against the oriented edge
+    * list. Out-degrees under this orientation are bounded by
+    * O(√|E|) (graph arboricity), so the wedge self-join is skew-robust:
+    * a 10^6-degree hub generates wedges at its *oriented* out-degree,
+    * not deg² — the property that makes the plan survive power-law
+    * graphs at 100 TB. Every step is an equi-join on edge keys (wedge
+    * closure joins on the (v,w) pair); the per-node count is one
+    * explode + map-side-combined groupBy.
+    *
+    * Input edges may be in either/both directions with duplicates; they
+    * are canonicalized (`least < greatest`, distinct, self-loops
+    * dropped) up front. `ccScale` bound: needs `2·tri·ccScale < 2^63`,
+    * i.e. per-node triangle counts below ~4.6·10^12 at the default 10^6. */
   def triangleStats(
       edges: DataFrame,
       srcCol: String = "src",
@@ -331,14 +364,8 @@ object Analytics {
       ccScale: Long = 1000000L,
       assumeCanonical: Boolean = false,
       tris: Option[DataFrame] = None): DataFrame = {
-    val parts = edges.sparkSession.sessionState.conf.numShufflePartitions
-    val e0 =
-      if (assumeCanonical) canonical(edges, srcCol, dstCol, assume = true)
-      else canonical(edges, srcCol, dstCol, assume = false)
-        .coalesce(parts).localCheckpoint(eager = true)
-    val deg = e0.select(col("a").as("id"))
-      .union(e0.select(col("b").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("deg"))
+    val (e0, deg) = canonicalDegrees(edges, srcCol, dstCol, assumeCanonical,
+      pinner(edges, checkpoint = true))
     val triFrame = tris.getOrElse(
       triangles(e0, "a", "b", assumeCanonical = true))
     val triCnt = triFrame
@@ -383,24 +410,76 @@ object Analytics {
       broadcastStateBelow: Long = 4000000L): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
     require(rounds >= 1, s"rounds must be >= 1: $rounds")
-    val parts = edges.sparkSession.sessionState.conf.numShufflePartitions
-    def pin(df: DataFrame): DataFrame =
-      if (checkpoint) df.coalesce(parts).localCheckpoint(eager = true) else df
-    val e0 = canonical(edges, srcCol, dstCol, assumeCanonical)
-    var sym = pin(e0.select(col("a").as("u"), col("b").as("v"))
-      .union(e0.select(col("b").as("u"), col("a").as("v"))))
-    val st = stateHint(sym.count(), checkpoint, broadcastStateBelow)
+    val p = prelude(symmetrise(canonical(edges, srcCol, dstCol, assumeCanonical)),
+      checkpoint, broadcastStateBelow)
+    var sym = p.edges
     for (_ <- 1 to rounds) {
       val keep = sym.groupBy("u").agg(count(lit(1)).as("dg"))
         .filter(col("dg") >= k).select(col("u"))
-      sym = pin(sym
-        .join(st(keep), Seq("u"), "left_semi")
-        .join(st(keep.select(col("u").as("v"))), Seq("v"), "left_semi")
+      sym = p.pin(sym
+        .join(p.st(keep), Seq("u"), "left_semi")
+        .join(p.st(keep.select(col("u").as("v"))), Seq("v"), "left_semi")
         .select(col("u"), col("v")))
     }
     sym.groupBy("u").agg(count(lit(1)).as("core_deg"))
       .select(col("u").as("node_id"), col("core_deg"))
   }
+
+  /** The min-relaxation Δ-loop behind [[connectedComponentsBounded]],
+    * [[bfsBounded]], [[ssspBounded]] and
+    * [[graft.ext.Dedup.dedupGroups]]: synchronous rounds of
+    * `x'(v) = min(x(v), min_{(u,v)} x(u) + cost(u,v))` over the
+    * symmetrised canonical `edges` (`(a, b)`, plus the cost column `c`
+    * when `cost` reads one). `init` maps the pinned symmetrised edge list
+    * `(u, v, …)` to the start rows `(id, x)`, duplicate ids keeping
+    * their minimum; a node without a row is unreached until a message
+    * arrives. Returns `(id, x)` for every reached node after `rounds`
+    * rounds, or earlier once a round changed no value.
+    *
+    * Scale shape — Δ rounds: values only decrease, so a node whose value
+    * did not change last round has nothing new to say (its value was
+    * already folded into its neighbours' minima a round ago — the
+    * standard delta argument; dropping unchanged senders provably never
+    * alters any round's values, and AnalyticsSpec pins bit-equality with
+    * the naive full recurrences). A round is one equi-join of the pinned
+    * |E| frame against Δ (message volume = edges incident to Δ,
+    * collapsing as values settle) and one group-by that folds the
+    * messages into the state with a change flag, its partial `min`
+    * combining map-side so the exchange is O(|V|), not O(messages) — one
+    * join plus one group-by per superstep, the Pregelix shape. Each
+    * round's state pins behind the barrier; with `checkpoint` on, one
+    * job of one trivial task per partition checks whether Δ is empty
+    * before the next round. */
+  private[graft] def relax(
+      edges: DataFrame, init: DataFrame => DataFrame, cost: Column,
+      rounds: Int, checkpoint: Boolean, broadcastStateBelow: Long): DataFrame = {
+    require(rounds >= 1, s"rounds must be >= 1: $rounds")
+    val p = prelude(symmetrise(edges), checkpoint, broadcastStateBelow)
+    val none = lit(null).cast("long")
+    var state = p.pin(init(p.edges).groupBy("id").agg(min(col("x")).as("x"))
+      .withColumn("chg", lit(true)))
+    def delta = state.filter(col("chg"))
+    var r = 0
+    do {
+      val msgs = p.edges
+        .join(p.st(delta.select(col("id").as("u"), col("x").as("xu"))), Seq("u"))
+        .select(col("v").as("id"), none.as("x"), (col("xu") + cost).as("m"))
+      state = p.pin(state.select(col("id"), col("x"), none.as("m")).union(msgs)
+        .groupBy("id").agg(min(col("x")).as("x"), min(col("m")).as("m"))
+        .select(col("id"), least(col("x"), col("m")).as("x"),
+          coalesce(col("m") < col("x"), col("m").isNotNull).as("chg")))
+      r += 1
+    } while (r < rounds && (!checkpoint || nonEmpty(delta)))
+    state.select(col("id"), col("x"))
+  }
+
+  /** [[relax]] start rows: every node is its own label. */
+  private[graft] def ownLabels(sym: DataFrame): DataFrame =
+    sym.select(col("u").as("id"), col("u").as("x"))
+
+  /** [[relax]] start rows: the seed ids at distance 0. */
+  private def atZero(sources: DataFrame): DataFrame =
+    sources.toDF("id").select(col("id").cast("long"), lit(0L).as("x"))
 
   /** Bounded-round HashMin connected components: `rounds` synchronous
     * rounds of `lab'(v) = min(lab(v), min_{u∈N(v)} lab(u))` starting
@@ -414,27 +493,10 @@ object Analytics {
     * trade that for asymmetric moves that don't replay as one SQL
     * recurrence). Returns `(node_id, component)`.
     *
-    * Complements [[graft.ext.Dedup.dedupGroups]]'s GraphX
-    * `connectedComponents` (the converged tier): this is the
-    * DataFrame-native recurrence a second engine replays exactly —
-    * q86 unrolls it in DuckDB and hash-compares.
-    *
-    * Scale shape — FRONTIER rounds: labels only decrease, so a
-    * neighbour that did not change last round has nothing new to say
-    * (its label was already folded into this node's min a round ago —
-    * the standard delta argument; dropping unchanged senders provably
-    * never alters any round's labels, and AnalyticsSpec pins
-    * bit-equality with the naive full recurrence). Round 1 therefore
-    * joins the full |E| edge list against all |V| initial labels; round
-    * r > 1 joins only the CHANGED label set Δ — message volume is
-    * |edges incident to Δ| and collapses geometrically as components
-    * settle, exactly like [[kCoreBounded]]'s shrinking edge list. Each
-    * round: one equi-join (messages from Δ), one map-side-combined
-    * `min` per receiver (the combine makes the exchange O(receivers),
-    * not O(messages)), and one |V|-side left join folding the
-    * improvements in while computing the next Δ. Every round's label
-    * and Δ frames pin behind barriers ([[pageRankFixed]]'s checkpoint
-    * rationale). The symmetrized edge list is built once. */
+    * [[graft.ext.Dedup.dedupGroups]] runs the same loop with no round
+    * bound (the converged tier); bounded, it is a recurrence a second
+    * engine replays exactly — q86 unrolls it in DuckDB and hash-compares.
+    * Scale shape: [[relax]] with cost 0, all nodes in the first Δ. */
   def connectedComponentsBounded(
       edges: DataFrame,
       srcCol: String = "src",
@@ -442,34 +504,10 @@ object Analytics {
       rounds: Int = 5,
       checkpoint: Boolean = true,
       assumeCanonical: Boolean = false,
-      broadcastStateBelow: Long = 4000000L): DataFrame = {
-    require(rounds >= 1, s"rounds must be >= 1: $rounds")
-    val parts = edges.sparkSession.sessionState.conf.numShufflePartitions
-    def pin(df: DataFrame): DataFrame =
-      if (checkpoint) df.coalesce(parts).localCheckpoint(eager = true) else df
-    val e0 = canonical(edges, srcCol, dstCol, assumeCanonical)
-    val sym = pin(e0.select(col("a").as("u"), col("b").as("v"))
-      .union(e0.select(col("b").as("u"), col("a").as("v"))))
-    var lab = pin(sym.select(col("u").as("id")).distinct()
-      .select(col("id"), col("id").as("lab")))
-    val st = stateHint(sym.count(), checkpoint, broadcastStateBelow)
-    // Δ: the senders whose label is news to their neighbours — all of
-    // them initially, then only last round's improvements
-    var delta = lab
-    for (_ <- 1 to rounds) {
-      val msgs = sym
-        .join(st(delta.select(col("id").as("v"), col("lab"))), Seq("v"))
-        .groupBy(col("u")).agg(min(col("lab")).as("m"))
-      val next = pin(lab
-        .join(st(msgs.select(col("u").as("id"), col("m"))), Seq("id"), "left")
-        .select(col("id"),
-          least(col("lab"), coalesce(col("m"), col("lab"))).as("lab"),
-          (col("m") < col("lab")).as("__chg")))
-      delta = pin(next.filter(col("__chg")).select(col("id"), col("lab")))
-      lab = next.select(col("id"), col("lab"))
-    }
-    lab.select(col("id").as("node_id"), col("lab").as("component"))
-  }
+      broadcastStateBelow: Long = 4000000L): DataFrame =
+    relax(canonical(edges, srcCol, dstCol, assumeCanonical), ownLabels,
+      lit(0L), rounds, checkpoint, broadcastStateBelow)
+      .select(col("id").as("node_id"), col("x").as("component"))
 
   /** Bounded multi-source BFS: hop distance from a seed set over the
     * undirected graph, `rounds` synchronous frontier expansions —
@@ -486,12 +524,8 @@ object Analytics {
     * measures it: how many nodes, at what depth, from e.g. the hub
     * parts a curation query anchors on.
     *
-    * Scale shape: textbook frontier BFS — round r joins ONLY the layer
-    * discovered at r−1 against the edge list (message volume = edges
-    * incident to the frontier), one map-side-combined `min` per
-    * candidate, an anti-join drops already-visited nodes, and the new
-    * layer unions into the pinned visited frame. No round ever touches
-    * the whole |V|. */
+    * Scale shape: BFS distance is unit-cost [[ssspBounded]] — [[relax]]
+    * with cost 1, whose Δ is exactly the layer discovered last round. */
   def bfsBounded(
       edges: DataFrame,
       sources: DataFrame, // one column: the seed node ids
@@ -500,29 +534,10 @@ object Analytics {
       rounds: Int = 3,
       checkpoint: Boolean = true,
       assumeCanonical: Boolean = false,
-      broadcastStateBelow: Long = 4000000L): DataFrame = {
-    require(rounds >= 1, s"rounds must be >= 1: $rounds")
-    val parts = edges.sparkSession.sessionState.conf.numShufflePartitions
-    def pin(df: DataFrame): DataFrame =
-      if (checkpoint) df.coalesce(parts).localCheckpoint(eager = true) else df
-    val e0 = canonical(edges, srcCol, dstCol, assumeCanonical)
-    val sym = pin(e0.select(col("a").as("u"), col("b").as("v"))
-      .union(e0.select(col("b").as("u"), col("a").as("v"))))
-    val st = stateHint(sym.count(), checkpoint, broadcastStateBelow)
-    val seeds = sources.toDF("id").select(col("id").cast("long")).distinct()
-    var visited = pin(seeds.select(col("id"), lit(0L).as("dist")))
-    var frontier = visited
-    for (r <- 1 to rounds) {
-      val layer = pin(sym
-        .join(st(frontier.select(col("id").as("v"))), Seq("v"))
-        .select(col("u").as("id")).distinct()
-        .join(st(visited.select(col("id"))), Seq("id"), "left_anti")
-        .select(col("id"), lit(r.toLong).as("dist")))
-      visited = pin(visited.union(layer))
-      frontier = layer
-    }
-    visited.select(col("id").as("node_id"), col("dist"))
-  }
+      broadcastStateBelow: Long = 4000000L): DataFrame =
+    relax(canonical(edges, srcCol, dstCol, assumeCanonical), _ => atZero(sources),
+      lit(1L), rounds, checkpoint, broadcastStateBelow)
+      .select(col("id").as("node_id"), col("x").as("dist"))
 
   /** Bounded weighted single/multi-source shortest paths: `rounds`
     * synchronous Bellman-Ford relaxations (Bellman 1958's recurrence,
@@ -545,14 +560,7 @@ object Analytics {
     * path-relevant reduction; `assumeCanonical=true` inputs must
     * already be simple `a < b` lists, one cost per pair). Costs must be
     * non-negative for the bounded distances to be monotone in rounds.
-    *
-    * Scale shape: the Δ pattern of [[connectedComponentsBounded]] —
-    * round r relaxes ONLY edges incident to nodes improved at r−1
-    * (all seeds initially), one map-side-combined `min` per candidate
-    * (the combine makes the exchange O(receivers), not O(messages)),
-    * then one full-outer |reached|-side join folds improvements in and
-    * computes the next Δ. Message volume collapses as distances settle;
-    * no round touches the whole graph once the wave passes. */
+    * Scale shape: [[relax]] with the edge cost, the seeds as first Δ. */
   def ssspBounded(
       edges: DataFrame,
       sources: DataFrame, // one column: the seed node ids
@@ -562,45 +570,10 @@ object Analytics {
       rounds: Int = 3,
       checkpoint: Boolean = true,
       assumeCanonical: Boolean = false,
-      broadcastStateBelow: Long = 4000000L): DataFrame = {
-    require(rounds >= 1, s"rounds must be >= 1: $rounds")
-    val parts = edges.sparkSession.sessionState.conf.numShufflePartitions
-    def pin(df: DataFrame): DataFrame =
-      if (checkpoint) df.coalesce(parts).localCheckpoint(eager = true) else df
-    val e0 =
-      if (assumeCanonical)
-        edges.select(col(srcCol).cast("long").as("a"),
-          col(dstCol).cast("long").as("b"),
-          col(costCol).cast("long").as("c"))
-      else
-        edges.select(
-            least(col(srcCol), col(dstCol)).cast("long").as("a"),
-            greatest(col(srcCol), col(dstCol)).cast("long").as("b"),
-            col(costCol).cast("long").as("c"))
-          .filter(col("a") =!= col("b"))
-          .groupBy("a", "b").agg(min(col("c")).as("c"))
-    val sym = pin(e0.select(col("a").as("u"), col("b").as("v"), col("c"))
-      .union(e0.select(col("b").as("u"), col("a").as("v"), col("c"))))
-    val st = stateHint(sym.count(), checkpoint, broadcastStateBelow)
-    val seeds = sources.toDF("id").select(col("id").cast("long")).distinct()
-    var dist = pin(seeds.select(col("id"), lit(0L).as("dist")))
-    var delta = dist
-    for (_ <- 1 to rounds) {
-      val best = sym
-        .join(st(delta.select(col("id").as("u"), col("dist").as("du"))),
-          Seq("u"))
-        .groupBy(col("v").as("id"))
-        .agg(min(col("du") + col("c")).as("m"))
-      val next = pin(dist.join(best, Seq("id"), "full")
-        .select(col("id"),
-          least(coalesce(col("dist"), col("m")),
-            coalesce(col("m"), col("dist"))).as("dist"),
-          (col("dist").isNull || col("m") < col("dist")).as("__chg")))
-      delta = pin(next.filter(col("__chg")).select(col("id"), col("dist")))
-      dist = next.select(col("id"), col("dist"))
-    }
-    dist.select(col("id").as("node_id"), col("dist"))
-  }
+      broadcastStateBelow: Long = 4000000L): DataFrame =
+    relax(canonical(edges, srcCol, dstCol, assumeCanonical, Some(costCol)),
+      _ => atZero(sources), col("c"), rounds, checkpoint, broadcastStateBelow)
+      .select(col("id").as("node_id"), col("x").as("dist"))
 
   /** Synchronous label propagation (Raghavan et al. 2007), `rounds`
     * rounds, fully deterministic: every node starts labelled with its
@@ -630,24 +603,19 @@ object Analytics {
       broadcastStateBelow: Long = 4000000L): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(rounds >= 1, s"rounds must be >= 1: $rounds")
-    val parts = edges.sparkSession.sessionState.conf.numShufflePartitions
-    def pin(df: DataFrame): DataFrame =
-      if (checkpoint) df.coalesce(parts).localCheckpoint(eager = true) else df
-    val e0 = canonical(edges, srcCol, dstCol, assumeCanonical)
-    val sym = graft.functions.Phases.time("lprop sym") {
-      pin(e0.select(col("a").as("u"), col("b").as("v"))
-        .union(e0.select(col("b").as("u"), col("a").as("v"))))
+    val p = graft.functions.Phases.time("lprop sym") {
+      prelude(symmetrise(canonical(edges, srcCol, dstCol, assumeCanonical)),
+        checkpoint, broadcastStateBelow)
     }
     var lab = graft.functions.Phases.time("lprop init") {
-      pin(sym.select(col("u").as("id")).distinct()
+      p.pin(p.edges.select(col("u").as("id")).distinct()
         .select(col("id"), col("id").as("lab")))
     }
-    val st = stateHint(sym.count(), checkpoint, broadcastStateBelow)
     val top1 = Window.partitionBy("u").orderBy(desc("n"), asc("lab"))
     for (r <- 1 to rounds) {
       lab = graft.functions.Phases.time(s"lprop round $r") {
-        pin(sym
-          .join(st(lab.select(col("id").as("v"), col("lab"))), Seq("v"))
+        p.pin(p.edges
+          .join(p.st(lab.select(col("id").as("v"), col("lab"))), Seq("v"))
           .groupBy(col("u"), col("lab")).agg(count(lit(1)).as("n"))
           .withColumn("__rn", row_number().over(top1))
           .filter(col("__rn") === 1)
@@ -685,14 +653,8 @@ object Analytics {
       jScale: Long = 1000000L,
       assumeCanonical: Boolean = false,
       tris: Option[DataFrame] = None): DataFrame = {
-    val parts = edges.sparkSession.sessionState.conf.numShufflePartitions
-    val e0 =
-      if (assumeCanonical) canonical(edges, srcCol, dstCol, assume = true)
-      else canonical(edges, srcCol, dstCol, assume = false)
-        .coalesce(parts).localCheckpoint(eager = true)
-    val deg = e0.select(col("a").as("id"))
-      .union(e0.select(col("b").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("deg"))
+    val (e0, deg) = canonicalDegrees(edges, srcCol, dstCol, assumeCanonical,
+      pinner(edges, checkpoint = true))
     val triFrame = tris.getOrElse(
       triangles(e0, "a", "b", assumeCanonical = true))
     // each triangle lies on its 3 canonical edges; the third vertex is

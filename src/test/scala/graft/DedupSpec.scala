@@ -227,6 +227,30 @@ class DedupSpec extends SparkSpec {
       (1L, 1L), (2L, 1L), (3L, 1L), (4L, 4L), (5L, 4L), (9L, 9L)))
   }
 
+  test("dedupGroups ≡ union-find: converged labels, pair endpoints, one row per id") {
+    // a 40-node path listed high end first: its min id is 39 hops from
+    // the far end, past any small round bound
+    val path = (0 until 39).map(i => (140L - i, 139L - i))
+    // 500 and 501 are pair endpoints missing from ids; 7 and 8 are isolated
+    val pairs = path ++ Seq((3L, 500L), (501L, 4L))
+    val idList = (101L to 140L) ++ Seq(3L, 4L, 7L, 8L, 7L, 120L, 3L)
+    val nodes = (idList ++ pairs.flatMap(p => Seq(p._1, p._2))).distinct
+    val parent = scala.collection.mutable.Map(nodes.map(n => n -> n): _*)
+    def find(x: Long): Long = if (parent(x) == x) x else find(parent(x))
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      parent(ra max rb) = ra min rb
+    }
+    val want = nodes.map(n => n -> find(n)).sorted
+    val got = Dedup.dedupGroups(idList.toDF("doc_id"),
+        pairs.toDF("doc_a", "doc_b").repartition(3))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    assert(got === want)
+    assert(got.count(_._2 == 101L) === 40)
+    assert(got.contains((500L, 3L)) && got.contains((501L, 4L)))
+    assert(got.contains((7L, 7L)) && got.contains((8L, 8L)))
+  }
+
   test("dupSpanStats: equals a naive recomputation, partition-independent") {
     val k = 8
     val fixture = Tables.load(spark, sf(), "documents")

@@ -28,6 +28,19 @@ class EntrySpec extends SparkSpec {
       "entry(dir) produced identical results at sf0.001 and sf0.01")
   }
 
+  test("onlyQueries: full names select; short, unknown or no names fail loudly") {
+    assert(SparkEntry.onlyQueries(" q58_dedup_groups, q86_cc_bounded ,") ===
+      Set("q58_dedup_groups", "q86_cc_bounded"))
+    val f = java.nio.file.Files.createTempFile("only", ".txt")
+    try {
+      java.nio.file.Files.writeString(f, "q85_bm25\n\nq84_rollup\n")
+      assert(SparkEntry.onlyQueries(f.toString) === Set("q84_rollup", "q85_bm25"))
+    } finally java.nio.file.Files.delete(f)
+    Seq("q84,q85", "q58_dedup_groups,q58_typo", " , ").foreach { spec =>
+      intercept[IllegalArgumentException](SparkEntry.onlyQueries(spec))
+    }
+  }
+
   test("every queries entry runs and yields rows at sf0.001") {
     // q06 (customers with no orders) is legitimately empty at this SF —
     // empty-vs-empty still hash-matches the oracle.
